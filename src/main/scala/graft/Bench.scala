@@ -51,7 +51,9 @@ object Bench {
       * bench_full.json artifact).
       */
     def compactJson(sfDir: String, cold: Option[Result] = None): String = {
-      def ms(v: Double): String = "%.3f".format(v)
+      // Locale.ROOT: the default locale of a comma-decimal JVM would write
+      // 1,234 and break the JSON
+      def ms(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
       def top(ts: Seq[(String, Double)], budget: Int): String = {
         val b = new StringBuilder
         var n = 0

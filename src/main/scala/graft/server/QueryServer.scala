@@ -33,6 +33,12 @@ import graft.kql.{Aggregation, Catalog, Compiler, Kql, KqlParseException, Parsed
   * queries. A keepalive comment frame probes the connection while the
   * handler thread is blocked inside a Spark job.
   *
+  * Status tracking (`statusDir`, reference `query_status.rs`): each query
+  * gets an id unique across server restarts ([[QueryIds]]), also its job
+  * group, and its transitions are appended to this server's file in the
+  * [[QueryStatus]] event log — no Spark job and no lock shared with other
+  * queries. [[QueryStatus.read]] folds the log to one row per query id.
+  *
   * Security: binds loopback by default; `raw("…")` (arbitrary Spark SQL —
   * it can read any local file) is refused unless `allowRaw` is set.
   *
@@ -46,9 +52,7 @@ final class QueryServer(
     statusDir: Option[String] = None) {
   private val mapper = new ObjectMapper()
   private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
-  // query-status tracking through an upsert sink (reference
-  // `miso-server/src/query_status.rs`): one record per query id, advanced
-  // planning → running → success/error/canceled; the table is plain parquet
+  // this server's file in the status log (see "Status tracking" above)
   private val statusWriter = statusDir.map(new QueryStatusWriter(spark, _))
   // per-step row metrics (reference miso-common/src/metrics.rs) harvested
   // from executed-plan SQLMetrics; owned per server so tests don't
@@ -134,7 +138,7 @@ final class QueryServer(
     val req = reqOf(ex)
     val parsed = Kql.parse(req.kql)
     checkRaw(parsed)
-    val groupId = s"graft-query-${QueryServer.ids.incrementAndGet()}"
+    val groupId = QueryServer.ids.next()
     val status = statusWriter.map(_.start(groupId, req.kql))
     // thread-local group: every job this handler thread submits joins it,
     // so a disconnect can cancel exactly this query's work
@@ -244,7 +248,7 @@ final class QueryServer(
     val suffix = steps.drop(lastAgg + 1)
     val compiler = new Compiler(spark, catalog, parsed.lets, streamFirstScan = true)
     compiler.errorCounter = Some(rowsNulled)
-    val qn = s"graft_partial_${QueryServer.ids.incrementAndGet()}"
+    val qn = "graft_partial_" + groupId.replace('-', '_')
     val started =
       try {
         val sdf = compiler.compile(prefix)
@@ -408,8 +412,19 @@ final class QueryServer(
   }
 }
 
+/** Query ids `graft-query-<token>-<n>`, also used as the query's Spark job
+  * group. The token is random per instance, and a process holds one
+  * instance ([[QueryServer.ids]]), so a restarted server that appends to
+  * the same status directory never reuses an earlier process's ids.
+  */
+final class QueryIds {
+  val token: String = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+  private val n = new AtomicLong(0L)
+  def next(): String = s"graft-query-$token-${n.incrementAndGet()}"
+}
+
 object QueryServer {
-  private val ids = new AtomicLong(0L)
+  val ids = new QueryIds
 
   /** Recursive step predicate over the main query, lets, and join/union
     * subqueries.
@@ -499,10 +514,10 @@ object QueryServer {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val cat = Catalog.forTestData(spark, sfDir)
-    // with status tracking enabled, the status table is itself queryable
+    // with status tracking enabled, the status log is itself queryable:
+    // each scan of query_status re-reads and folds it
     val statusDir = sys.env.get("SPARK_GRAFT_STATUS_DIR")
-    statusDir.foreach(d => cat.register("query_status",
-      graft.sources.Sinks.readUpserted(spark, d)))
+    statusDir.foreach(d => cat.register("query_status", QueryStatus.read(spark, d)))
     val srv = start(spark, cat, port, host, allowRaw, statusDir)
     println(s"graft query server listening on $host:${srv.boundPort} (sf=$sfDir)")
     Thread.currentThread().join()

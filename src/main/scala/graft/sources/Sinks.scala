@@ -37,49 +37,14 @@ object Sinks {
       .sortBy(key)
       .saveAsTable(table)
 
-  // One lock per target path: QueryServer's handler pool fires a status
-  // upsert per query lifecycle stage, and an unsynchronized
-  // read-merge-delete-rename loses records (both merge from the same
-  // pre-image) or leaves the directory briefly absent for readers.
+  // One lock per target path: concurrent upserts to one sink (e.g. two
+  // KQL `write`s from the server's handler pool) would otherwise both merge
+  // from the same pre-image and lose records in the unsynchronized
+  // read-merge-delete-rename.
   private val pathLocks =
     scala.collection.concurrent.TrieMap[String, Object]()
   private def lockFor(path: String): Object =
     pathLocks.getOrElseUpdate(path, new Object)
-
-  /** Read a directory that an [[upsert]] may be swapping concurrently.
-    * Same-JVM swaps are excluded outright by taking the writer's per-path
-    * lock around the read (the swap runs entirely under it, so a locked
-    * read never observes the dir-absent window). Swaps by ANOTHER JVM
-    * can't be locked against, so listing AND execution still race them
-    * (a lazily-read file can vanish between plan and task) — the whole
-    * read is therefore materialized inside a retry loop and returned as
-    * an in-memory frame. Sized for the same control tables upsert itself
-    * is (query status, watermark registries) — not a data-scale read
-    * path.
-    */
-  def readUpserted(
-      spark: SparkSession, path: String,
-      attempts: Int = 5, backoffMs: Long = 100): DataFrame = {
-    var last: Throwable = null
-    var i = 0
-    while (i < attempts) {
-      try {
-        return lockFor(path).synchronized {
-          val df = spark.read.parquet(path)
-          val rows = java.util.Arrays.asList(df.collect(): _*)
-          spark.createDataFrame(rows, df.schema)
-        }
-      } catch { case e: Throwable =>
-        // a cross-JVM swap leaves this session's shared FileStatusCache
-        // holding the pre-swap listing, and a bare retry would re-plan
-        // from that same stale cache forever — drop the cached listing
-        // before backing off
-        spark.catalog.refreshByPath(path)
-        last = e; i += 1; Thread.sleep(backoffMs)
-      }
-    }
-    throw last
-  }
 
   /** Key-based merge/overwrite (the reference's `UpdatableSink::upsert`,
     * `memory.rs:87-103`): incoming rows replace existing rows with the same
@@ -89,10 +54,10 @@ object Sinks {
     * nondeterministic — a DataFrame has no row order to make "last" of).
     *
     * Implementation is read-merge-write with a directory swap, sized for
-    * control tables (query status, watermark registries — the reference's
-    * only upsert consumers). At data scale, partition the target by a
-    * key-derived bucket and use dynamic partition-overwrite so a batch
-    * rewrites only the partitions its keys land in, not the whole table.
+    * control tables such as watermark registries. At data scale, partition
+    * the target by a key-derived bucket and use dynamic partition-overwrite
+    * so a batch rewrites only the partitions its keys land in, not the
+    * whole table.
     */
   def upsert(spark: SparkSession, df: DataFrame, path: String, primaryKey: String): Unit =
     lockFor(path).synchronized {
@@ -113,8 +78,7 @@ object Sinks {
       // the merged plan reads the directory it is about to replace — write
       // to a sibling temp dir first, then swap. The swap is two metadata
       // renames (not a recursive delete of the live dir), so the
-      // readers-see-nothing window is as small as the filesystem allows;
-      // readUpserted retries across it.
+      // readers-see-nothing window is as small as the filesystem allows.
       val tmp = new Path(path + ".upsert-tmp")
       val old = new Path(path + ".upsert-old")
       fs.delete(tmp, true)

@@ -41,4 +41,15 @@ class BenchSpec extends AnyFunSuite {
       "broken" -> ((_, _) => throw new RuntimeException("boom"))))
     assert(!bad.json("sf").contains(""""broken":{"min""""))
   }
+
+  test("compact json writes seconds with a decimal point under a comma-decimal locale") {
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      val json = Bench.Result(Seq("q" -> 1.5), Nil).compactJson("sf")
+      assert(json.contains(""""q":1.500"""))
+      val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      assert(parsed.get("queries").get("q").asDouble() == 1.5)
+    } finally java.util.Locale.setDefault(prev)
+  }
 }
