@@ -1455,8 +1455,7 @@ object KqlQueries {
         |WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin)(
       (s, dir) => {
         val cat = Catalog.forTestData(s, dir)
-        val sink = java.nio.file.Files
-          .createTempDirectory("graft_gate_tee_").toString + "/out"
+        val sink = Q.tempDir("graft_gate_tee") + "/out"
         cat.registerSink("dest", sink)
         Kql.run(s, cat,
           """events | where event_type == 'purchase'
@@ -1472,8 +1471,7 @@ object KqlQueries {
         |WHERE o_totalprice > 450000 ORDER BY o_orderkey""".stripMargin)(
       (s, dir) => {
         val cat = Catalog.forTestData(s, dir)
-        val sink = java.nio.file.Files
-          .createTempDirectory("graft_gate_write_").toString + "/out"
+        val sink = Q.tempDir("graft_gate_write") + "/out"
         cat.registerSink("dest", sink)
         Kql.run(s, cat,
           """orders | where o_totalprice > 450000

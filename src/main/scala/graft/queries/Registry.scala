@@ -18,4 +18,9 @@ object Q {
     Q(name, fn, Some(oracle))
   def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, None)
+
+  /** A fresh scratch directory for a gate's index or sink, registered for
+    * deletion at JVM shutdown. */
+  def tempDir(prefix: String): String =
+    org.apache.spark.sql.GraftColumnBridge.createTempDir(prefix).toString
 }

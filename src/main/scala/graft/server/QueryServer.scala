@@ -506,12 +506,7 @@ object QueryServer {
     val port = sys.env.getOrElse("SPARK_GRAFT_PORT", "8580").toInt
     val host = sys.env.getOrElse("SPARK_GRAFT_BIND", "127.0.0.1")
     val allowRaw = sys.env.get("SPARK_GRAFT_ALLOW_RAW").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     val cat = Catalog.forTestData(spark, sfDir)
     // with status tracking enabled, the status log is itself queryable:

@@ -29,6 +29,12 @@ object GraftColumnBridge {
       .internalCreateDataFrame(ck.queryExecution.toRdd, ck.schema)
   }
 
+  /** A fresh `<java.io.tmpdir>/<prefix>-<uuid>` directory that Spark
+    * deletes at JVM shutdown (`Utils.createTempDir`). */
+  def createTempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(
+      System.getProperty("java.io.tmpdir"), prefix)
+
   /** Re-bind a DataFrame's (analyzed) logical plan to another session
     * sharing the same SparkContext — the scoped-conf pattern: clone a
     * session (`spark.newSession()`), set the conf override there, bind the

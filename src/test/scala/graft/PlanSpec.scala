@@ -578,10 +578,9 @@ class PlanSpec extends AnyFunSuite {
   test("louvain refine: bounded aggregates broadcast, gain argmax is " +
       "partial/final, no cartesian candidates") {
     import org.apache.spark.sql.functions._
-    // The GATE's plan legitimately collapses to a scan of the session-
-    // cached level-1 checkpoint once any suite has populated the cache
+    // The GATE's plan is a scan of its materialized level-1 checkpoint
     // (pinned in the next test), so the ALGORITHM's shape is asserted on
-    // an uncached construction — range-backed like the kmeans
+    // an unmaterialized construction — range-backed like the kmeans
     // frozen-model test (a local Seq would constant-fold the plan).
     val seed = spark.range(64).select(
       col("id"), (col("id") % 7).as("community"))
@@ -601,15 +600,15 @@ class PlanSpec extends AnyFunSuite {
       s"the gain argmax must have a partial (map-side) stage:\n$p")
   }
 
-  test("louvain refine GATE serves the session-cached level-1 pass: a " +
-      "materialized scan, not a recomputation") {
-    // building the gate populates the cache eagerly (localCheckpoint),
-    // so this shape is deterministic regardless of suite order
+  test("louvain refine GATE reads its materialized level-1 pass: a " +
+      "checkpoint scan, not a recomputation") {
+    // building the gate checkpoints the level-1 pass eagerly
+    // (localCheckpoint), so the plan above the checkpoint is a scan
     val p = plan("pl_louvain_refine")
     assert(p.contains("Scan ExistingRDD"),
-      s"the gate must read the cached level-1 checkpoint:\n$p")
+      s"the gate must read the level-1 checkpoint:\n$p")
     assert(!p.contains("HashAggregate"),
-      s"serving the cached pass must not recompute the refine:\n$p")
+      s"reading the materialized pass must not recompute the refine:\n$p")
   }
 
   test("kmeans frozen-model assignment is one narrow pass: no exchange, " +

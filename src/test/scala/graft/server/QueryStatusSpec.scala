@@ -4,10 +4,9 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardOpenOption}
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.Executors
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.kql.Catalog
@@ -17,7 +16,7 @@ import graft.kql.Catalog
   * by the fold, and query ids stay unique across server restarts.
   */
 class QueryStatusSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{jobsFiredBy, spark}
 
   private def tmp(): String =
     Files.createTempDirectory("graft_status").resolve("log").toString
@@ -39,36 +38,6 @@ class QueryStatusSpec extends AnyFunSuite {
     QueryStatus.read(spark, dir).collect().map(r =>
       r.getAs[String](QueryStatus.QueryIdField) ->
         r.getAs[String](QueryStatus.StatusField)).toMap
-
-  /** Spark jobs started by `body` on this thread. The listener bus delivers
-    * events in order, so once a sentinel job submitted after `body` has
-    * been seen, every job `body` started has been seen too.
-    */
-  private def jobsFiredBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"status-spec-${java.util.UUID.randomUUID()}"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .filter(_.startsWith(group)).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "status transitions")
-      body
-      sc.setJobGroup(group + "-sentinel", "sentinel")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 60e9.toLong
-      while (!seen.contains(group + "-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(group + "-sentinel"), "sentinel job never reached the listener")
-      seen.asScala.count(_ == group)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("a transition fires no Spark job and appends one record, after 1,000 prior queries") {
     val dir = tmp()
